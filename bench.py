@@ -560,40 +560,49 @@ def main() -> None:
         if BIG_DOCS:
             big_dir = os.path.join(BENCH_TMP or tempfile.gettempdir(),
                                    f"corpus_{BIG_DOCS}")
-            tg = time.time()
-            if not os.path.exists(os.path.join(big_dir, "_SUCCESS")):
-                (synth_corpus(spark, BIG_DOCS, partitions=CPUS)
-                 .write.mode("overwrite").parquet(big_dir))
-            big_gen_s = round(time.time() - tg, 3)
             big_root = os.path.join(root, "idx_big")
-            pb = round(_phase_probe(spark, corpus_dir), 3)
-            t0 = time.time()
-            rep_big = build_index(
-                spark, spark.read.parquet(big_dir), big_root, n_buckets=16,
-                merge_partitions=CPUS, docmap_partitions=CPUS)
-            big_s = time.time() - t0
-            pa = round(_phase_probe(spark, corpus_dir), 3)
-            core_big = rep_big["timings"].get("postings_write", 0.0)
-            big_build = {
-                "n_docs": BIG_DOCS, "gen_s": big_gen_s,
-                "range_size": rep_big["range_size"],
-                "n_ranges": rep_big["n_ranges"],
-                "build_s": round(big_s, 3),
-                "docmap_s": round(rep_big.get("docmap_s", 0.0), 3),
-                "core_s": round(core_big, 3),
-                "files_per_sec": round(BIG_DOCS / big_s, 1),
-                "files_per_sec_core": round(BIG_DOCS / max(core_big, 1e-9),
-                                            1),
-                "probe_pre": pb, "probe_post": pa,
-            }
-            # serving at 10x: warm p50 of the hot conjunction
-            qs_big = QuerySession(spark, big_root, cache=True)
-            qs_big.topk("sharedlogger", k=10).collect()
-            t3 = sorted(_timed(qs_big, "sharedlogger mergeSegments", 10)
-                        for _ in range(3))
-            big_build["q_hot_and_p50_s"] = round(t3[1], 4)
-            qs_big.close()
-            shutil.rmtree(big_root, ignore_errors=True)
+            qs_big = None
+            try:
+                tg = time.time()
+                if not os.path.exists(os.path.join(big_dir, "_SUCCESS")):
+                    (synth_corpus(spark, BIG_DOCS, partitions=CPUS)
+                     .write.mode("overwrite").parquet(big_dir))
+                big_gen_s = round(time.time() - tg, 3)
+                pb = round(_phase_probe(spark, corpus_dir), 3)
+                t0 = time.time()
+                rep_big = build_index(
+                    spark, spark.read.parquet(big_dir), big_root,
+                    n_buckets=16, merge_partitions=CPUS,
+                    docmap_partitions=CPUS)
+                big_s = time.time() - t0
+                pa = round(_phase_probe(spark, corpus_dir), 3)
+                core_big = rep_big["timings"].get("postings_write", 0.0)
+                big_build = {
+                    "n_docs": BIG_DOCS, "gen_s": big_gen_s,
+                    "range_size": rep_big["range_size"],
+                    "n_ranges": rep_big["n_ranges"],
+                    "build_s": round(big_s, 3),
+                    "docmap_s": round(rep_big.get("docmap_s", 0.0), 3),
+                    "core_s": round(core_big, 3),
+                    "files_per_sec": round(BIG_DOCS / big_s, 1),
+                    "files_per_sec_core": round(
+                        BIG_DOCS / max(core_big, 1e-9), 1),
+                    "probe_pre": pb, "probe_post": pa,
+                }
+                # serving at 10x: warm p50 of the hot conjunction
+                qs_big = QuerySession(spark, big_root, cache=True)
+                qs_big.topk("sharedlogger", k=10).collect()
+                t3 = sorted(_timed(qs_big, "sharedlogger mergeSegments", 10)
+                            for _ in range(3))
+                big_build["q_hot_and_p50_s"] = round(t3[1], 4)
+            finally:
+                # a failed build or query leaves nothing behind: no cached
+                # session, no half-written index, no 10x corpus in /dev/shm
+                if qs_big is not None:
+                    qs_big.close()
+                shutil.rmtree(big_root, ignore_errors=True)
+                if BENCH_TMP:
+                    shutil.rmtree(big_dir, ignore_errors=True)
 
         out.update({
             "metric": (

@@ -205,6 +205,16 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"wiped": args.index}))
         return 0
 
+    if (args.cmd == "query" and len(args.index) > 1
+            and (args.mode not in ("and", "or", "phrase")
+                 or args.facet is not None or args.snippet or args.after
+                 or args.hydrate or args.must_not is not None
+                 or args.phrase_scoring != "terms")):
+        # federated_topk takes none of these flags: reject them before a
+        # JVM starts rather than silently ignore them
+        p.error("multiple --index roots support plain and/or/phrase "
+                "top-k only")
+
     spark = _spark(f"li-{args.cmd}", args.master)
     try:
         if args.cmd == "build":
@@ -221,11 +231,6 @@ def main(argv: list[str] | None = None) -> int:
             if len(roots) > 1:
                 # multi-root searchAll (reference cIndex.java:59-69):
                 # per-root stats, exact TakeOrdered merge
-                if (args.mode not in ("and", "or", "phrase")
-                        or args.facet is not None or args.snippet
-                        or args.after or args.hydrate):
-                    p.error("multiple --index roots support plain "
-                            "and/or/phrase top-k only")
                 out = federated_topk(
                     spark, roots, args.query, k=args.k, mode=args.mode,
                     slop=args.slop,

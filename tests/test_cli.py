@@ -6,6 +6,7 @@ import os
 import subprocess
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 from luceneindexer_spark.corpus import HOT_TERM, synth_corpus
@@ -199,3 +200,22 @@ def test_cli_query_multi_root_federation(spark, tmp_path):
     # identical roots: hits pair up (root 0 then root 1, same doc/score)
     assert [h["root_id"] for h in hits[:2]] == [0, 1]
     assert hits[0]["doc_id"] == hits[1]["doc_id"]
+
+
+@pytest.mark.parametrize("flags", [
+    ["--must-not", "segments"],
+    ["--mode", "phrase", "--phrase-scoring", "phrase_freq"],
+    ["--hydrate"]])
+def test_cli_multi_root_rejects_unsupported_flags(monkeypatch, tmp_path,
+                                                  flags):
+    """federated_topk takes neither --must-not nor --phrase-scoring, so a
+    query over repeated --index roots must reject them rather than
+    silently drop them — and reject before any Spark session starts."""
+    from luceneindexer_spark import cli
+    started = []
+    monkeypatch.setattr(cli, "_spark", lambda *a: started.append(a))
+    with pytest.raises(SystemExit) as exc:
+        cli.main(["query", "--index", str(tmp_path / "a"),
+                  "--index", str(tmp_path / "b"), *flags, HOT_TERM])
+    assert exc.value.code == 2
+    assert not started

@@ -4,12 +4,13 @@ term pushdown on the postings scan, and comparison-predicate pushdown on
 the docmap scan (brief: "a scan that reads all columns for a 2-column
 projection is wrong"; `.explain` is the check, these tests pin it)."""
 
+import itertools
 import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from luceneindexer_spark.corpus import HOT_TERM, synth_corpus
+from luceneindexer_spark.corpus import HOT_TERM, PHRASE, synth_corpus
 from luceneindexer_spark.index.build import build_index
 from luceneindexer_spark.query import engine
 
@@ -18,8 +19,16 @@ from luceneindexer_spark.query import engine
 def built(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("idx_plan"))
     corpus = synth_corpus(spark, 300, partitions=4)
-    build_index(spark, corpus, root, n_buckets=4, range_size=64, waves=1)
+    build_index(spark, corpus, root, n_buckets=4, range_size=64, waves=1,
+                positions=True)
     return root
+
+
+@pytest.fixture(scope="module")
+def cached(built, spark):
+    qs = engine.QuerySession(spark, built, cache=True)
+    yield qs
+    qs.close()
 
 
 def _scans(df):
@@ -82,12 +91,84 @@ def test_excl_range_and_deny_range_push_comparisons(built, spark):
                for _, _, pu, _ in dm2)
 
 
-def test_hydrate_broadcasts_topk_not_corpus(built, spark):
+def _broadcast_child(plan: str) -> str:
+    """The first operator below the plan's BroadcastExchange, past
+    Filter/Project wrappers — the relation the join broadcasts."""
+    lines = plan.splitlines()
+    i = next(i for i, ln in enumerate(lines) if "BroadcastExchange" in ln)
+    return next(op for op in (ln.lstrip(" :+-") for ln in lines[i + 1:])
+                if not op.startswith(("Filter", "Project")))
+
+
+_HYDRATE_SITES = {
+    "hydrate": lambda spark, root, qs: engine.hydrate(
+        spark, root, qs.topk(HOT_TERM, k=5)),
+    "search_fields": lambda spark, root, qs: engine.search_fields(
+        spark, root, {"content": HOT_TERM}, k=5, session=qs),
+    "search_fields_allowlist": lambda spark, root, qs: engine.search_fields(
+        spark, root, {"content": HOT_TERM, "lang": "py"}, k=5, session=qs),
+    "search_fields_parsed": lambda spark, root, qs:
+        engine.search_fields_parsed(spark, root, {"content": HOT_TERM}, k=5,
+                                    session=qs),
+    "search_fields_whole_words": lambda spark, root, qs:
+        engine.search_fields_whole_words(spark, root, {"content": PHRASE},
+                                         k=5, session=qs),
+    "highlight_topk": lambda spark, root, qs: engine.highlight_topk(
+        spark, root, HOT_TERM, k=5, session=qs),
+}
+
+
+@pytest.mark.parametrize("site", sorted(_HYDRATE_SITES))
+def test_hydrate_broadcasts_topk_not_corpus(built, spark, site):
+    """Every hydrating call joins the docmap to the k hit rows by
+    broadcasting the hits — the scorer's TakeOrdered k-row cut — never
+    the corpus side."""
     qs = engine.QuerySession(spark, built)
-    top = qs.topk(HOT_TERM, k=5)
-    plan = (engine.hydrate(spark, built, top)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+    df = _HYDRATE_SITES[site](spark, built, qs)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert _broadcast_child(plan).startswith("TakeOrderedAndProject"), plan
+    assert df.count() > 0
+
+
+_groups = itertools.count()
+
+
+def _jobs(spark, call) -> int:
+    """Spark jobs of one serving call, plan compilation included: counted
+    through statusTracker under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"plan-audit-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        assert call().collect(), "the call must return hits"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("kind, want", [
+    ("and", 1), ("or", 1), ("phrase", 1), ("must_not", 1),
+    ("query_string", 1), ("topk_batch", 2)])
+def test_serving_jobs_per_call(cached, spark, kind, want):
+    """A cached session serves each single query in ONE Spark job (the
+    co-partitioned cache makes the cogroup a single stage; term stats are
+    pinned on the driver) and a batch pass in two (the per-query rank
+    window adds one exchange). Pins the plan shapes the benchmark's
+    jobs/stages-per-call layers measure."""
+    terms = [t for t, _ in sorted(cached._stats_local.items(),
+                                  key=lambda kv: (-kv[1][0], kv[0]))
+             if t and ":" not in t]
+    a, b, c, rare = *terms[:3], terms[-1]
+    calls = {
+        "and": lambda: cached.topk(f"{a} {b}", k=10),
+        "or": lambda: cached.topk(f"{a} {c}", k=10, mode="or"),
+        "phrase": lambda: cached.topk(PHRASE, k=10, mode="phrase"),
+        "must_not": lambda: cached.topk(a, k=10, must_not=rare),
+        "query_string": lambda: cached.query_string(f"+{a} +{b} -{rare}"),
+        "topk_batch": lambda: cached.topk_batch(
+            {"q1": f"{a} {b}", "q2": c, "q3": f"{b} {c}"}, k=10),
+    }
+    assert _jobs(spark, calls[kind]) == want
 
 
 def test_matchall_and_open_bound_plans(built, spark):
